@@ -903,3 +903,162 @@ def test_maintenance_lock_released_on_failure(spark, tmp_path, rng):
     # lock is gone: compact proceeds
     lake.compact()
     assert lake.count() == 10
+
+
+def _spark_work(spark, group: str, fn):
+    """Run ``fn`` under its own job group; return its result and the
+    Spark jobs and tasks it started."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # job/stage events reach the status tracker asynchronously
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    tasks = sum(
+        tracker.getStageInfo(st).numTasks
+        for j in jobs
+        for st in tracker.getJobInfo(j).stageIds
+    )
+    return out, len(jobs), tasks
+
+
+def _absent_probe_query(lake, present, n_probes, rng):
+    """A query vector none of whose probed shards is in ``present``."""
+    from vector_lake_spark.operators.ann import multiprobe_shards
+
+    while True:
+        q = (rng.rand(lake.dimension) - 0.5).tolist()
+        if not set(multiprobe_shards(q, lake.hyperplanes, n_probes)) & present:
+            return q
+
+
+def test_query_lists_only_probed_shards(spark, tmp_path, rng):
+    """With more shards than Spark's 32-directory parallel-listing
+    threshold, a query still plans without any Spark job (``load()``
+    starts a listing job over every shard), its collect scans at most
+    one task per probed shard, and it returns what a whole-store scan
+    pruned to the same shards returns."""
+    from pyspark.sql import functions as F
+
+    from vector_lake_spark.operators.ann import multiprobe_shards
+    from vector_lake_spark.operators.topk import topk_cosine
+
+    lake = SparkVectorLake(spark, str(tmp_path / "lake"), dimension=8, approx_shards=64)
+    vecs = (rng.rand(2000, 8) - 0.5).tolist()
+    lake.add_batch(vecs)
+    lake.persist()
+    # the whole-store listing a query avoids; it also reads the schema
+    # every later query declares
+    _, load_jobs, _ = _spark_work(spark, "vlake-load", lake.load)
+    assert load_jobs >= 1
+
+    n_probes = 2
+    df, jobs, _ = _spark_work(
+        spark, "vlake-plan", lambda: lake.query(vecs[1], k=5, n_probes=n_probes)
+    )
+    assert jobs == 0
+    rows, jobs, tasks = _spark_work(spark, "vlake-run", df.collect)
+    assert jobs >= 1 and tasks <= n_probes
+
+    probes = multiprobe_shards(vecs[1], lake.hyperplanes, n_probes)
+    whole = topk_cosine(
+        lake.load().filter(F.col("shard_id").isin(probes)), vecs[1], 5,
+        vec_col="vector", id_col="id",
+        keep_cols=("metadata", "document", "timestamp", "vector"),
+    ).collect()
+    assert rows == whole and rows[0]["score"] == pytest.approx(1.0)
+
+
+def test_query_sees_writes_of_another_instance(spark, tmp_path, rng):
+    """Nothing about the layout is cached between queries: rows another
+    instance appends, into a shard directory that did not exist at this
+    instance's last query and then into one that did, show up on the
+    next query."""
+    loc = str(tmp_path / "lake")
+    reader = SparkVectorLake(spark, loc, dimension=8, approx_shards=256)
+    reader.add_batch((rng.rand(5, 8) - 0.5).tolist())
+    reader.persist()
+    present = {r["shard_id"] for r in reader.load().select("shard_id").distinct().collect()}
+    q = _absent_probe_query(reader, present, 1, rng)
+    assert reader.query(q, k=3).count() == 0
+
+    writer = SparkVectorLake(spark, loc, dimension=8, approx_shards=256)
+    writer.add_batch([q], ids=["fresh1"])
+    writer.persist()
+    assert [r["id"] for r in reader.query(q, k=3).collect()] == ["fresh1"]
+
+    writer.add_batch([[2 * x for x in q]], ids=["fresh2"])
+    writer.persist()
+    assert sorted(r["id"] for r in reader.query(q, k=3).collect()) == ["fresh1", "fresh2"]
+
+
+def test_query_sparse_store_absent_shard_dirs(spark, tmp_path, rng):
+    """A few rows at approx_shards=256 leave most shard directories
+    absent. Probes that land partly on them return the rows of the
+    present shards; probes that land wholly on them return an empty
+    frame (also under a ``where`` predicate) — never PATH_NOT_FOUND."""
+    from vector_lake_spark.operators.ann import multiprobe_shards
+
+    lake = SparkVectorLake(spark, str(tmp_path / "lake"), dimension=8, approx_shards=256)
+    vecs = (rng.rand(6, 8) - 0.5).tolist()
+    ids = lake.add_batch(vecs)
+    lake.persist()
+    shard_of = {r["id"]: r["shard_id"] for r in lake.load().select("id", "shard_id").collect()}
+    present = set(shard_of.values())
+
+    partly = [
+        i for i, v in enumerate(vecs)
+        if set(multiprobe_shards(v, lake.hyperplanes, 2)) - present
+    ]
+    assert partly
+    i = partly[0]
+    probes = set(multiprobe_shards(vecs[i], lake.hyperplanes, 2))
+    got = {r["id"] for r in lake.query(vecs[i], k=10, n_probes=2).collect()}
+    assert got == {rid for rid, s in shard_of.items() if s in probes}
+    assert ids[i] in got
+
+    q = _absent_probe_query(lake, present, 2, rng)
+    assert lake.query(q, k=4, n_probes=2).collect() == []
+    assert lake.query(q, k=4, n_probes=2, where="document = ''").count() == 0
+
+
+def test_query_fresh_instance_detects_schema_drift(spark, tmp_path, rng):
+    """The schema a query declares comes from one drift-checked read:
+    a fresh instance over a store written with an extra column raises
+    on its first query, as ``load()`` does."""
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    loc = str(tmp_path / "lake")
+    lake = SparkVectorLake(spark, loc, dimension=4, approx_shards=16)
+    vecs = (rng.rand(20, 4) - 0.5).tolist()
+    lake.add_batch(vecs)
+    lake.persist()
+    drifted = lake.load().withColumn("extra", F.lit(1))
+    drifted.write.mode("overwrite").partitionBy("shard_id").parquet(f"{loc}/data__drift")
+    shutil.rmtree(f"{loc}/data")
+    shutil.move(f"{loc}/data__drift", f"{loc}/data")
+
+    fresh = SparkVectorLake(spark, loc, dimension=4, approx_shards=16)
+    with pytest.raises(ValueError, match="schema drift"):
+        fresh.query(vecs[0], k=2)
+
+
+def test_partition_store_escaped_key(spark, tmp_path, rng):
+    """A partition key Spark path-escapes in its directory name (``/``,
+    ``:``) still finds its directory when the query looks it up."""
+    loc = str(tmp_path / "p")
+    part = SparkPartition(spark, loc, partition_key="feat/a:1", dimension=3)
+    vecs = rng.rand(4, 3).tolist()
+    ids = part.add_batch(vecs)
+    part.persist()
+    other = SparkPartition(spark, loc, partition_key="feat_b", dimension=3)
+    other.add_batch(rng.rand(3, 3).tolist())
+    other.persist()
+    hits = part.query(vecs[2], k=10).collect()
+    assert {r["id"] for r in hits} == set(ids) and hits[0]["id"] == ids[2]

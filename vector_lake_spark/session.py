@@ -45,6 +45,15 @@ def get_spark(
         # depends on those footers — test_store.py)
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # a scan over more than 32 directories (store.load() over every
+        # shard) lists them in a Spark job; the default parallelism of
+        # 10000 gives it one task per directory. Planning load() over 256
+        # shards at local[4]: ~1.16 s that way, ~0.14 s with one task per
+        # core
+        .config(
+            "spark.sql.sources.parallelPartitionDiscovery.parallelism",
+            str(cpus if cpus.isdigit() else os.cpu_count() or 1),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         # cluster-side equivalent of the env pinning above (local mode

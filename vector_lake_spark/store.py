@@ -35,8 +35,10 @@ sidecar for store attrs (the reference stuffs attrs into pandas
 ``DataFrame.attrs`` → Parquet metadata, index.py:296-305; a sidecar is the
 idiomatic dataset-level equivalent).
 
-Scale design: ``shard_id`` is a physical partition column, so a query's
-``WHERE shard_id IN (...)`` prunes directories at planning time — on a
+Scale design: ``shard_id`` is a physical partition column. A query plans
+a scan over only its probed shard directories — an existence check and a
+file listing per probed shard, driver-side — so planning starts no Spark
+job and never lists the other shards. On a
 100 TB store with 256 shards a single-probe query reads ~0.4% of the data.
 Appends never rewrite existing files (the reference rewrites whole segments
 per sync — index.py:307-308 — which cannot scale); small-file compaction is
@@ -269,7 +271,11 @@ class SparkVectorLake:
         """Lazy scan of the whole store; schema validated like the
         reference's frame_schema check (index.py:249-250). A store that was
         never persisted scans as empty (the reference returns [] for
-        empty-store queries — tests/test_properties.py:74-85)."""
+        empty-store queries — tests/test_properties.py:74-85).
+
+        Planning lists every shard directory (one Spark listing job once
+        the store has more than 32 shards); ``query`` reads through
+        ``_scan_shards`` instead, which lists only the probed ones."""
         from pyspark.errors.exceptions.captured import AnalysisException
 
         def _empty() -> DataFrame:
@@ -302,6 +308,35 @@ class SparkVectorLake:
         self._read_schema = df.schema
         return df
 
+    def _scan_shards(self, shard_ids: Sequence) -> DataFrame:
+        """Lazy scan of only the listed shards' directories.
+
+        One existence check per listed shard skips the absent ones
+        (with none present the scan is empty, typed like the store so a
+        string partition key still compares with ``shard_id``); Spark
+        then lists just the present directories, serially on the driver
+        up to its 32-path threshold. Planning starts no Spark job and
+        caches nothing, so the next call sees any write made in
+        between. The schema is declared from the first ``load()`` of
+        this instance, which also runs the drift check."""
+        if self._read_schema is None:
+            df = self.load()
+            if self._read_schema is None:  # empty store
+                return df
+        jvm = self.spark._jvm
+        # the directory name carries the partition value path-escaped
+        escape = jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName
+        dirs = [f"{self._data_path}/shard_id={escape(str(sid))}" for sid in shard_ids]
+        fs, _ = self._fs_path(self._data_path)
+        dirs = [d for d in dirs if fs.exists(jvm.org.apache.hadoop.fs.Path(d))]
+        if not dirs:
+            return self.spark.createDataFrame([], self._read_schema)
+        return (
+            self.spark.read.schema(self._read_schema)
+            .option("basePath", self._data_path)
+            .parquet(*dirs)
+        )
+
     def query(
         self,
         vector: Sequence[float],
@@ -310,6 +345,9 @@ class SparkVectorLake:
         where: "F.Column | str | None" = None,
     ) -> DataFrame:
         """Route → partition-pruned probe → exact cosine top-k (A8/A9/A11).
+
+        Planning lists only the probed shard directories
+        (``_scan_shards``), never the whole store.
 
         ``n_probes > 1`` adds lowest-margin bit-flip shards (multi-probe;
         recall knob the reference lacks). ``where`` is an optional
@@ -328,7 +366,7 @@ class SparkVectorLake:
                 f"{self.dimension}"
             )
         probes = multiprobe_shards(vector, self.hyperplanes, n_probes)
-        pruned = self.load().filter(F.col("shard_id").isin(probes))
+        pruned = self._scan_shards(probes).filter(F.col("shard_id").isin(probes))
         if where is not None:
             pruned = pruned.filter(
                 F.expr(where) if isinstance(where, str) else where
@@ -952,7 +990,9 @@ class SparkPartition(SparkVectorLake):
         self._write_meta(attrs)
 
     def query(self, vector: Sequence[float], k: int = 4, n_probes: int = 1) -> DataFrame:
-        pruned = self.load().filter(F.col("shard_id") == self.partition_key)
+        pruned = self._scan_shards([self.partition_key]).filter(
+            F.col("shard_id") == self.partition_key
+        )
         return topk_cosine(
             pruned, [float(x) for x in vector], k, vec_col="vector", id_col="id",
             keep_cols=("metadata", "document", "timestamp", "vector"),
